@@ -32,13 +32,12 @@ handler paths).
 Scale posture: every channel is selects/filters off one shared scan — no
 shuffle, no UDF, full whole-stage codegen; per-partition order is preserved
 because nothing repartitions between decode and sink (SURVEY §3.4).  The
-routing predicates are FLAT columns (decoded int, error class, value
-length), so Catalyst prunes the expensive generated string out of every
-channel that doesn't emit it — only the output sink pays for generation,
-and only for records that will actually be produced (too-large records are
-size-checked on the *declared* length and never materialized).  In
-streaming the caller persists the micro-batch so the source is read once
-(see ``streaming.runner``).
+routing decision is made once per record, as a label over FLAT columns
+(decoded int, error class, declared length) in one persisted staging
+frame, and each channel is an equality filter on that label — so the
+source is read once per batch, and only the output sink pays for string
+generation, only for records that will actually be produced (too-large
+records are size-checked on the *declared* length and never materialized).
 """
 
 from __future__ import annotations
@@ -66,10 +65,11 @@ from kafka_streams_dead_letter_publishing_spark.serde import (
     utf8_encode,
 )
 
-# re-exported for compatibility (historical home of the constant)
-from kafka_streams_dead_letter_publishing_spark.operators.mapper import (  # noqa: F401
-    NULL_VALUE_ERROR_CLASS,
-)
+#: Routed's channel fields, in declaration order; route() labels each staged
+#: row with its channel's POSITION here (an int: cheap to cache and filter,
+#: and immune to two channels sharing a topic name)
+_CHANNELS = ("output", "process_dlt", "deser_dlt", "prod_dlt")
+_LABEL = "__channel"
 
 
 class Routed(NamedTuple):
@@ -79,12 +79,10 @@ class Routed(NamedTuple):
     process_dlt: DataFrame
     deser_dlt: DataFrame
     prod_dlt: DataFrame
-    #: the persisted decoded staging frame all four channels read (r18,
-    #: the r17 advice: route() persists it, so the OWNER of the Routed —
-    #: streaming.runner.process_batch, or any long-lived batch caller —
-    #: must unpersist it once the channel writes complete; None when a
-    #: custom topology built the channels without a shared staging)
-    staged: DataFrame | None = None
+    #: the persisted staging frame (decoded value + channel label) that all
+    #: four channels filter; whoever runs the channels owns
+    #: ``staged.unpersist()`` once they are written
+    staged: DataFrame
 
     def union_all(self) -> DataFrame:
         """All channels as one DataFrame (inspection/testing)."""
@@ -94,12 +92,15 @@ class Routed(NamedTuple):
             .unionByName(self.prod_dlt)
         )
 
-    def unpersist_staged(self) -> None:
-        """Release the staged decode cache (no-op without one).  Safe
-        after the channel writes: the cache is a pure function of the
-        source batch, so a late consumer just recomputes."""
-        if self.staged is not None:
-            self.staged.unpersist()
+    def channel_counts(self) -> dict[str, int]:
+        """Rows per channel, keyed by field name (zero-row channels report
+        0): one global aggregate of conditional counts over the cached
+        label — after the channel writes it reads only the staged cache."""
+        label = F.col(_LABEL)
+        row = self.staged.agg(
+            *(F.count(F.when(label == i, 1)).alias(c) for i, c in enumerate(_CHANNELS))
+        ).first()
+        return row.asDict()
 
 
 def _sink_shape(df: DataFrame, key: Column, value: Column, headers: Column, topic: str) -> DataFrame:
@@ -130,30 +131,36 @@ def too_large_message(size: Column, max_request_size: int) -> Column:
     )
 
 
+def _channel(n: Column, value: Column, key: Column, cfg: EngineConfig, labels) -> Column:
+    """Each record's channel — the routing decision, written once: deser →
+    process-error → too-large → output.  ``n`` is the decoded value;
+    ``labels`` names the four channels in ``_CHANNELS`` order."""
+    output, process, deser, prod = (F.lit(x) for x in labels)
+    too_large = serialized_record_size(n.cast("long"), key) > F.lit(cfg.max_request_size)
+    return (
+        # op #9: decode failure on a present value ⇒ deser channel
+        F.when(n.isNull() & value.isNotNull(), deser)
+        # op #3/#5: the mapper's failure modes ⇒ process channel
+        .when(map_error_class(n, value).isNotNull(), process)
+        # op #10: mapped length == n by construction, so the size check
+        # needs no materialized string
+        .when(too_large, prod)
+        .otherwise(output)
+    )
+
+
 def route_topic_label(df: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
     """Single-pass routing DECISION: each record labeled with the topic
-    ``route`` would send it to, without materializing the four channels.
-
-    Same predicates as :func:`route` in the same precedence order (deser →
-    process-error → too-large → output) — use for routing counts and
-    monitoring where a 4-way union would re-scan the source once per
-    channel (the per-channel contracts themselves are pinned by ``route``'s
-    outputs and their oracle queries).
+    ``route`` would send it to, without materializing the four channels —
+    a projection of the same ``_channel`` decision ``route`` filters on.
+    Use for routing counts and monitoring where a 4-way union would re-scan
+    the source once per channel.
     """
     cfg = cfg or EngineConfig()
     key, value = F.col("key"), F.col("value")
     decoded = df.withColumn("__n", int32be_decode(value))
-    n = F.col("__n")
-    is_deser_failure = n.isNull() & value.isNotNull()
-    has_error = map_error_class(n, value).isNotNull()
-    is_too_large = serialized_record_size(n.cast("long"), key) > F.lit(cfg.max_request_size)
-    return decoded.select(
-        F.when(is_deser_failure, F.lit(cfg.deser_dlt))
-        .when(has_error, F.lit(cfg.process_dlt))
-        .when(is_too_large, F.lit(cfg.prod_dlt))
-        .otherwise(F.lit(cfg.output_topic))
-        .alias("topic")
-    )
+    topics = (cfg.output_topic, cfg.process_dlt, cfg.deser_dlt, cfg.prod_dlt)
+    return decoded.select(_channel(F.col("__n"), value, key, cfg, topics).alias("topic"))
 
 
 def route(df: DataFrame, cfg: EngineConfig | None = None) -> Routed:
@@ -171,62 +178,53 @@ def route(df: DataFrame, cfg: EngineConfig | None = None) -> Routed:
         df = df.withColumn("headers", empty_headers())
     uniq_parts = [F.col(c) for c in ("topic", "partition", "offset") if c in cols]
     # materialized as a column: the generator's per-block lambda references
-    # it once per 13 output chars, and higher-order functions re-evaluate
-    # inlined (non-attribute) expressions on every reference
+    # it once per 12 output chars (CHARS_PER_HASH), and higher-order
+    # functions re-evaluate inlined (non-attribute) expressions on every
+    # reference
     df = df.withColumn("__uniq", F.xxhash64(F.col("key"), *uniq_parts))
     uniq = F.col("__uniq")
 
     key, value, headers = F.col("key"), F.col("value"), F.col("headers")
 
-    # ── op #2: typed decode; failure ⇒ NULL ⇒ deser channel (op #9) ──────
+    # ── op #2: typed decode, then the one routing decision per record ────
     n = F.col("__n")
-    # PERSIST the decoded staging (r17, measured from the channel-query
-    # plans): the four channel filters otherwise push BELOW the staged
-    # __uniq/__n projections — and below any upstream repartition — where
-    # Catalyst re-inlines the full decode chain into each filter
-    # condition (the routing predicate ran pre-exchange on the source
-    # scan's single partition, then the projection re-evaluated the same
-    # chain post-exchange).  Filters cannot push below an
-    # InMemoryRelation, so every channel reads the staged columns; the
-    # decode runs once, at session parallelism.  Per-batch caches are
-    # unpinned by the ContextCleaner once the Routed frames drop.
-    decoded = df.withColumn("__n", int32be_decode(value)).persist()
-    is_deser_failure = n.isNull() & value.isNotNull()
+    # PERSIST the staging (r17, measured from the channel-query plans): the
+    # channel filters otherwise push BELOW the staged projections — and
+    # below any upstream repartition — where Catalyst re-inlines the full
+    # decode chain into each filter condition.  Filters cannot push below
+    # an InMemoryRelation, so the decode and the routing decision run once,
+    # at session parallelism, and each channel is an equality filter on
+    # the cached label.  Nothing unpins this cache on its own (the
+    # CacheManager holds it): whoever runs the channels owns
+    # ``staged.unpersist()``.
+    staged = (
+        df.withColumn("__n", int32be_decode(value))
+        .withColumn(_LABEL, _channel(n, value, key, cfg, range(len(_CHANNELS))))
+        .persist()
+    )
+
+    def channel(name: str) -> DataFrame:
+        return staged.filter(F.col(_LABEL) == _CHANNELS.index(name))
 
     deser_dlt = _sink_shape(
-        decoded.filter(is_deser_failure),
+        channel("deser_dlt"),
         key,
         value,  # raw bytes untouched (DeadLetterDeserializationExceptionHandler.java:38)
         append_error_header(headers, int32_deser_error_message(value)),
         cfg.deser_dlt,
     )
 
-    # ── op #3: error-capturing map — failure modes as FLAT columns so
-    #    routing-only consumers never pay for string generation ────────────
-    wrapped = (
-        decoded.filter(~is_deser_failure)
-        .withColumn("__error_class", map_error_class(n, value))
-        .withColumn("__error_message", map_error_message(n, value))
-    )
-    has_error = F.col("__error_class").isNotNull()
-
-    # ── op #5/#6: split on hasError; error branch restores the ORIGINAL
-    #    value and appends "<class>: <message>" (ErrorMessageMapper) ───────
+    # ── op #5/#6: error branch restores the ORIGINAL value and appends
+    #    "<class>: <message>" (ErrorMessageMapper) ────────────────────────
     process_dlt = _sink_shape(
-        wrapped.filter(has_error),
+        channel("process_dlt"),
         key,
         int32be_encode(n),  # original, pre-map value
         append_error_header(
-            headers, error_header_text(F.col("__error_class"), F.col("__error_message"))
+            headers, error_header_text(map_error_class(n, value), map_error_message(n, value))
         ),
         cfg.process_dlt,
     )
-
-    # ── op #7: success branch; mapped length == n by construction, so the
-    #    size check needs no materialized string ──────────────────────────
-    ok = wrapped.filter(~has_error)
-    out_size = serialized_record_size(n.cast("long"), key)
-    is_too_large = out_size > F.lit(cfg.max_request_size)
 
     # ── op #10: pre-flight production guard — Spark's Kafka sink has no
     #    post-hoc producer hook, so the size check runs before the write;
@@ -234,16 +232,19 @@ def route(df: DataFrame, cfg: EngineConfig | None = None) -> Routed:
     #    oversized string is NEVER generated
     #    (DeadLetterProductionExceptionHandler.java:59-67) ─────────────────
     prod_dlt = _sink_shape(
-        ok.filter(is_too_large),
+        channel("prod_dlt"),
         key,
         F.lit(b""),
-        append_error_header(headers, too_large_message(out_size, cfg.max_request_size)),
+        append_error_header(
+            headers,
+            too_large_message(serialized_record_size(n.cast("long"), key), cfg.max_request_size),
+        ),
         cfg.prod_dlt,
     )
 
-    # ── op #4/#8: generate + typed serialize, output sink only ───────────
+    # ── op #4/#7/#8: generate + typed serialize, output sink only ────────
     output = _sink_shape(
-        ok.filter(~is_too_large),
+        channel("output"),
         key,
         utf8_encode(random_lowercase_string(n, uniq, cfg.seed)),
         headers,
@@ -255,5 +256,5 @@ def route(df: DataFrame, cfg: EngineConfig | None = None) -> Routed:
         process_dlt=process_dlt,
         deser_dlt=deser_dlt,
         prod_dlt=prod_dlt,
-        staged=decoded,
+        staged=staged,
     )

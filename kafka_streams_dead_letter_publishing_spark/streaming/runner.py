@@ -23,8 +23,8 @@ cluster-parallel generation on under-partitioned batches.
 
 Scale posture (SURVEY §4.3): ``maxOffsetsPerTrigger`` bounds a micro-batch
 (backpressure), ``minPartitions`` lets a 1000-executor cluster split hot
-topic partitions, and the micro-batch is persisted once and read by all four
-sinks instead of four source scans.
+topic partitions, and ``route`` persists one staging frame per micro-batch
+that all four sinks read instead of four source scans.
 """
 
 from __future__ import annotations
@@ -34,8 +34,7 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 _LOG = logging.getLogger(__name__)
@@ -43,16 +42,7 @@ _LOG = logging.getLogger(__name__)
 from kafka_streams_dead_letter_publishing_spark.config import EngineConfig
 from kafka_streams_dead_letter_publishing_spark.operators.topology import Routed, route
 
-#: Sink contract: ``write(df, topic)`` MUST execute at least one FULL Spark
-#: action over ``df`` (a write, a count — anything that runs every
-#: partition).  The metrics path rides ``df.observe()`` accumulators, which
-#: only publish when an action over the observed frame completes — a writer
-#: that short-circuits (e.g. returns early on ``isEmpty``, or a no-op test
-#: stub) would otherwise leave ``Observation.get`` blocked forever (r3
-#: ADVICE).  ``process_batch`` guards the metrics read with a non-blocking
-#: check + fallback count, so a contract-violating sink costs one extra job
-#: per channel instead of a hang — but the write-path semantics (dead
-#: letters PUBLISHED before output) still require the sink to actually run.
+#: Sink contract: ``write(df, topic)`` publishes ``df`` to ``topic``.
 #:
 #: THREAD-SAFETY (r4 ADVICE): ``process_batch`` submits the three DLT
 #: writes from a thread pool (concurrent Spark jobs), so ``write`` may be
@@ -173,8 +163,9 @@ class DeadLetterStream:
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         """The foreachBatch body — also callable directly on a batch
-        DataFrame (unit tier).  Persists the micro-batch so the four sink
-        writes share one source read (SURVEY §4.2 "single read, multi-sink")."""
+        DataFrame (unit tier).  The four sink writes share one read of the
+        micro-batch through ``route``'s persisted staging frame (SURVEY
+        §4.2 "single read, multi-sink"), which this method unpersists."""
         if self.cfg.batch_fan_out:
             # spread the RAW records before decode/generation (guide §2/§8:
             # move light rows, then compute heavy bytes in place) — an
@@ -182,30 +173,14 @@ class DeadLetterStream:
             # stage on one core.  Opt-in: costs per-partition input order
             # (see EngineConfig.batch_fan_out).
             batch = batch.repartition(self.cfg.batch_fan_out)
-        batch.persist()
-        routed = None
+        routed = self.topology(batch, self.cfg)
         try:
-            routed = self.topology(batch, self.cfg)
             channels = [
-                (routed.deser_dlt, self.cfg.deser_dlt),
-                (routed.process_dlt, self.cfg.process_dlt),
-                (routed.prod_dlt, self.cfg.prod_dlt),
-                (routed.output, self.cfg.output_topic),
+                ("deser_dlt", self.cfg.deser_dlt),
+                ("process_dlt", self.cfg.process_dlt),
+                ("prod_dlt", self.cfg.prod_dlt),
+                ("output", self.cfg.output_topic),
             ]
-            # Per-channel routed counts ride the sink writes as observe()
-            # accumulators — zero extra jobs (r2 ran four count() jobs per
-            # batch on top of the writes).  The engine's analogue of the
-            # reference handlers' per-failure logging
-            # (DeadLetterDeserializationExceptionHandler.java:37).
-            observations: list[tuple[str, Observation, DataFrame]] = []
-            if self.metrics is not None:
-                instrumented = []
-                for df, topic in channels:
-                    obs = Observation()
-                    watched = df.observe(obs, F.count(F.lit(1)).alias("n"))
-                    observations.append((topic, obs, watched))
-                    instrumented.append((watched, topic))
-                channels = instrumented
             # Dead letters first: if a DLT publish fails we die *before*
             # emitting output, bounding duplicate output records on retry —
             # same motivation as the reference's shutdown-on-DLT-failure.
@@ -213,58 +188,25 @@ class DeadLetterStream:
             # so they run as CONCURRENT Spark jobs (each channel is small;
             # sequential writes leave the cluster idle between job
             # submissions) — output still waits for all dead letters.
-            dlt_channels, out_channels = channels[:3], channels[3:]
-            with ThreadPoolExecutor(max_workers=len(dlt_channels)) as pool:
+            with ThreadPoolExecutor(max_workers=3) as pool:
                 futures = [
-                    pool.submit(self.sink, df, topic) for df, topic in dlt_channels
+                    pool.submit(self.sink, getattr(routed, name), topic)
+                    for name, topic in channels[:3]
                 ]
                 for f in futures:
                     f.result()  # re-raises the first DLT failure: fail-stop
-            for df, topic in out_channels:
-                self.sink(df, topic)
+            self.sink(routed.output, self.cfg.output_topic)
             if self.metrics is not None:
-                self.metrics(
-                    batch_id,
-                    {
-                        topic: self._observed_count(obs, watched)
-                        for topic, obs, watched in observations
-                    },
-                )
+                # the engine's analogue of the reference handlers'
+                # per-failure logging
+                # (DeadLetterDeserializationExceptionHandler.java:37)
+                counts = routed.channel_counts()
+                self.metrics(batch_id, {topic: counts[name] for name, topic in channels})
         finally:
-            # release BOTH per-batch caches (r17 advice: route()'s internal
-            # decode persist had no owner — one abandoned InMemoryRelation
-            # per micro-batch, released only when GC + py4j + the
-            # ContextCleaner caught up; on a long-running stream that is
-            # unbounded cache-registry growth).  getattr: a custom topology
-            # may return a plain 4-field tuple without the staged slot.
-            staged = getattr(routed, "staged", None)
-            if staged is not None:
-                staged.unpersist()
-            batch.unpersist()
-
-    @staticmethod
-    def _observed_count(obs: Observation, watched: DataFrame) -> int:
-        """Routed-count metric for one channel, hang-proof.
-
-        ``Observation.get`` BLOCKS until an action over the observed frame
-        completes; a SinkWriter that violated its run-one-full-action
-        contract (see the ``SinkWriter`` doc) would hang the micro-batch
-        here with no error.  The JVM Observation exposes a non-blocking
-        ``getOrEmpty``; when it is empty the sink demonstrably ran no
-        action, so fall back to an explicit count job (which is also the
-        honest number: nothing was written, but this is what WOULD have
-        been routed)."""
-        try:  # non-public accessor — probed defensively across versions
-            jmap = obs._jo.getOrEmpty()
-            if not jmap.isEmpty():
-                return int(obs.get["n"])  # completed: non-blocking now
-        except Exception:  # noqa: BLE001
-            # Spark 4.1's getOrEmpty NPEs when the observation has not run
-            # yet (measured) — same meaning as an empty map; any other
-            # JVM/API mismatch also lands here and pays one count job
-            # rather than hanging
-            pass
-        return watched.count()
+            # the staged cache has no other owner: without this, one
+            # InMemoryRelation per micro-batch stays pinned in the
+            # CacheManager for the life of the stream
+            routed.staged.unpersist()
 
     def start(self, source: DataFrame, trigger: dict[str, Any] | None = None) -> StreamingQuery:
         writer = (

@@ -113,11 +113,12 @@ def test_stream_resumes_from_checkpoint_exactly_once_per_record(spark, tmp_path)
 
 
 def test_multi_batch_drive_leaves_no_cached_frames(spark, tmp_path):
-    """route() persists a per-batch decode staging; process_batch must
-    unpersist it (plus the batch itself) in its finally — the r17 advice:
-    an unowned cache per micro-batch is unbounded storage growth on a
-    long-running stream.  Drive 4 real micro-batches and assert the JVM
-    cache registry ends exactly where it started."""
+    """route() persists one staging frame per micro-batch and nothing else
+    caches the batch; process_batch must unpersist it in its finally — the
+    r17 advice: an unowned cache per micro-batch is unbounded storage growth
+    on a long-running stream.  Drive 4 real micro-batches, assert every
+    sink write sees exactly ONE cache beyond the base, and the JVM cache
+    registry ends exactly where it started."""
     cfg = EngineConfig(checkpoint_dir=str(tmp_path / "ckpt"))
     src_dir = str(tmp_path / "src")
     sink_dir = str(tmp_path / "sinks")
@@ -126,12 +127,19 @@ def test_multi_batch_drive_leaves_no_cached_frames(spark, tmp_path):
         # contract is "the drive adds none", not "the registry is empty"
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
+    parquet_sink = parquet_sink_writer(sink_dir)
+    during_writes = []
+
+    def counting_sink(df, topic):
+        parquet_sink(df, topic)  # the write builds the batch's caches
+        during_writes.append(n_cached())
+
     records_df(spark, [(b"k0", int32be(4))]).coalesce(1).write.mode(
         "append"
     ).parquet(src_dir)
     base_cached = n_cached()
     source = spark.readStream.schema(KAFKA_SOURCE_SCHEMA).parquet(src_dir)
-    stream = DeadLetterStream(cfg, parquet_sink_writer(sink_dir))
+    stream = DeadLetterStream(cfg, counting_sink)
     query = stream.start(source)
     try:
         query.processAllAvailable()
@@ -142,6 +150,8 @@ def test_multi_batch_drive_leaves_no_cached_frames(spark, tmp_path):
             query.processAllAvailable()
     finally:
         query.stop()
+    assert len(during_writes) == 4 * 4
+    assert during_writes == [base_cached + 1] * len(during_writes)
     assert n_cached() == base_cached
     assert spark.read.parquet(f"{sink_dir}/{cfg.output_topic}").count() == 4
 
@@ -165,12 +175,25 @@ def test_empty_batch_is_harmless(spark, tmp_path):
 
 
 def test_metrics_hook_reports_per_channel_counts(spark, tmp_path):
+    """Every channel nonzero, and the hook agrees with route_topic_label."""
+    from kafka_streams_dead_letter_publishing_spark.operators.topology import (
+        route_topic_label,
+    )
+
     cfg = EngineConfig(checkpoint_dir=str(tmp_path / "ckpt"))
     src_dir = str(tmp_path / "src")
-    records_df(
+    records = records_df(
         spark,
-        [(b"k1", int32be(2)), (b"k2", int32be(9)), (b"k3", int32be(-1)), (b"k4", b"zz")],
-    ).write.parquet(src_dir)
+        [
+            (b"k1", int32be(2)),
+            (b"k2", int32be(9)),
+            (b"k3", int32be(-1)),
+            (b"k4", b"zz"),
+            (b"k5", int32be(2_000_000)),  # too large
+            (b"k6", None),  # NULL value: process channel
+        ],
+    )
+    records.write.parquet(src_dir)
 
     seen: dict[int, dict[str, int]] = {}
     stream = DeadLetterStream(
@@ -186,15 +209,17 @@ def test_metrics_hook_reports_per_channel_counts(spark, tmp_path):
 
     (counts,) = seen.values()
     assert counts[cfg.output_topic] == 2
-    assert counts[cfg.process_dlt] == 1
+    assert counts[cfg.process_dlt] == 2
     assert counts[cfg.deser_dlt] == 1
-    assert counts[cfg.prod_dlt] == 0
+    assert counts[cfg.prod_dlt] == 1
+    labels = route_topic_label(records, cfg).groupBy("topic").count().collect()
+    assert counts == {r.topic: r["count"] for r in labels}
 
 
 def test_metrics_survive_contract_violating_noop_sink(spark, tmp_path):
-    """A SinkWriter that runs NO action over the frame violates its
-    contract; the metrics path must fall back to a count instead of
-    blocking forever on Observation.get (r3 ADVICE)."""
+    """A SinkWriter that runs NO action over the frame must not hang or
+    zero the metrics (r3 ADVICE): the counts come from route()'s staged
+    label, not from the sink's jobs."""
     cfg = EngineConfig(checkpoint_dir=str(tmp_path / "ckpt"))
     seen: dict[int, dict[str, int]] = {}
 
@@ -286,7 +311,7 @@ def test_serialize_sink_writer_serializes_concurrent_dlt_writes(spark):
                 state["in_crit"] += 1
                 state["max_in_crit"] = max(state["max_in_crit"], state["in_crit"])
             time.sleep(0.2)  # widen the race window across the 3 DLT threads
-            df.count()  # SinkWriter contract: one full action
+            df.count()  # a real Spark job inside the race window
             with meter:
                 state["calls"].append(topic)
                 state["in_crit"] -= 1
